@@ -1217,8 +1217,6 @@ object Similarity {
       val freshNext = next.filter(col("__new"))
         .select(col("query_id"), col("neighbor_id"))
       val newEdges = freshNext.count()
-      if (sys.env.contains("GRAFT_NND_DEBUG"))
-        System.err.println(s"[nnDescent] round=$r new=$newEdges t=${System.nanoTime()/1e9}")
       // the superseded round's pinned blocks are dead from here on — free
       // them now instead of letting them pile up in the block manager for
       // the session's remaining queries (round 0's topk is OUR pin of the

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.operators.{Clustering, Profiles}
 import graft.sources.{Federation, Nexus}
 import org.apache.spark.sql.functions._
@@ -194,21 +194,14 @@ object ClusterQueries extends QueryModule {
   // posture: FOUR queries consume the identical assignment (g4_lincode,
   // j5_lincode_prefix, lin_prefix_tree, s10_replicate_lincodes), so the
   // sweep pays ONE driver-side assignment loop per session instead of
-  // one per execution. Ownership documented: session-lifetime, pinned
-  // via Pinning.pin, entries evicted when their session stops.
-  private val linCodesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.DataFrame]()
-
+  // one per execution. Pinned via Pinning.pin for the session's lifetime.
   private def cachedLinCodes(
-      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    linCodesCache.entrySet.removeIf(
-      _.getValue.sparkSession.sparkContext.isStopped)
-    linCodesCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|300|30,60,90",
-      _ => graft.operators.Pinning.pin(
+      s: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    SessionMemo(s, "ClusterQueries.linCodes", dir) {
+      graft.operators.Pinning.pin(
         Clustering.assignLinCodes(wh(s, dir, 300), "l_orderkey",
-          Seq(30.0, 60.0, 90.0))))
-  }
+          Seq(30.0, 60.0, 90.0)))
+    }
 
   // G4: LIN codes — order-dependent sequential assignment made deterministic
   // by fixing the order (ascending id); oracled by a full recursive-CTE

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.sources.{Embl, Fasta, Gff3, RemoteContigs, SchemaConfig}
 import org.apache.spark.sql.functions._
 
@@ -463,28 +463,23 @@ object SourceQueries extends QueryModule {
   // table — equality IS the proof that pruning lost nothing.
   // ZoneMapsSpec additionally pins that files were actually skipped and
   // the null-zone prune rule.
-  private val zonemapLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedZonemapLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    zonemapLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"zonemap_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(16, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        // registry-routed (r13 VERDICT #1): both artifacts — zone maps
-        // on the range column, the per-file doc_id Bloom (the point-
-        // predicate half; id zones span every file under the n_chars
-        // order), word_idx-clustered — ride WITH the table under
-        // <data>/_skipping via one registration; serving catalogs
-        // resolve the Layout from the table itself, nothing hand-built
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.zonemapLayout", dir) {
+      val p = tmp(dir, s"zonemap_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(16, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      // registry-routed (r13 VERDICT #1): both artifacts — zone maps
+      // on the range column, the per-file doc_id Bloom (the point-
+      // predicate half; id zones span every file under the n_chars
+      // order), word_idx-clustered — ride WITH the table under
+      // <data>/_skipping via one registration; serving catalogs
+      // resolve the Layout from the table itself, nothing hand-built
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      p
+    }
 
   private val scanZonemapPrune = Q(
     "scan_zonemap_prune",
@@ -615,27 +610,22 @@ object SourceQueries extends QueryModule {
   // appended rows are served (a stale survivor list would drop them).
   // ZoneMapsSpec pins that files are actually skipped post-ingest and
   // that registry-routed ≡ hand-routed.
-  private val ingestLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedIngestLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    ingestLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"ingeststats_${invocation.incrementAndGet()}")
-        val docs = Tables.load(s, dir, "documents")
-        docs.filter(col("doc_id") % 2 === 0)
-          .repartitionByRange(8, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        graft.sources.SkippingRegistry.appendFiles(
-          docs.filter(col("doc_id") % 2 === 1)
-            .repartitionByRange(8, col("n_chars"), col("doc_id")),
-          s"$p/data")
-        p
-      })
+    SessionMemo(s, "SourceQueries.ingestLayout", dir) {
+      val p = tmp(dir, s"ingeststats_${invocation.incrementAndGet()}")
+      val docs = Tables.load(s, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .repartitionByRange(8, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      graft.sources.SkippingRegistry.appendFiles(
+        docs.filter(col("doc_id") % 2 === 1)
+          .repartitionByRange(8, col("n_chars"), col("doc_id")),
+        s"$p/data")
+      p
+    }
 
   private val ingestStatsPublish = Q(
     "ingest_stats_publish",
@@ -670,22 +660,17 @@ object SourceQueries extends QueryModule {
   // third clause (prefix on an UNINDEXED text column) exercises the
   // sound drop-under-AND path. Oracle = the plain ci filter over the
   // full table; ZoneMapsSpec pins the case-fold rule and file skips.
-  private val textLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTextLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    textLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"textzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(8, col("lang"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("lang"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.textLayout", dir) {
+      val p = tmp(dir, s"textzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(8, col("lang"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("lang"))
+      p
+    }
 
   private val scanPrunedText = Q(
     "scan_pruned_text",
@@ -719,23 +704,18 @@ object SourceQueries extends QueryModule {
   // and yyyy-MM-dd clause values prune as day intervals. The layout is
   // date-clustered (the natural order of an append-by-day corpus), so
   // a quarter's range clause skips the other quarters' files.
-  private val dateLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedDateLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    dateLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"datezones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "orders")
-          .withColumn("o_orderdate", col("o_orderdate").cast("date"))
-          .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("o_orderdate"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.dateLayout", dir) {
+      val p = tmp(dir, s"datezones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "orders")
+        .withColumn("o_orderdate", col("o_orderdate").cast("date"))
+        .repartitionByRange(8, col("o_orderdate"), col("o_orderkey"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("o_orderdate"))
+      p
+    }
 
   private val scanPrunedDate = Q(
     "scan_pruned_date",
@@ -775,32 +755,27 @@ object SourceQueries extends QueryModule {
   // the stream-maintained stats serve every committed row and the
   // replay added nothing. SkippingRegistrySpec drives the same
   // machinery through a real MemoryStream.
-  private val streamStatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedStreamStatsLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    streamStatsCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"streamstats_${invocation.incrementAndGet()}")
-        val docs = Tables.load(s, dir, "documents")
-        docs.filter(col("doc_id") % 2 === 0)
-          .repartitionByRange(8, col("n_chars"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
-        val odd = docs.filter(col("doc_id") % 2 === 1)
-        (0 to 2).foreach { c =>
-          graft.streaming.StatsStream.maintainStep(
-            odd.filter(col("doc_id") % 3 === c), c.toLong, s"$p/data")
-        }
-        // at-least-once redelivery of the last batch: the marker in the
-        // published stats version skips it
+    SessionMemo(s, "SourceQueries.streamStats", dir) {
+      val p = tmp(dir, s"streamstats_${invocation.incrementAndGet()}")
+      val docs = Tables.load(s, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .repartitionByRange(8, col("n_chars"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("n_chars"), bloomCol = Some("doc_id"))
+      val odd = docs.filter(col("doc_id") % 2 === 1)
+      (0 to 2).foreach { c =>
         graft.streaming.StatsStream.maintainStep(
-          odd.filter(col("doc_id") % 3 === 2), 2L, s"$p/data")
-        p
-      })
+          odd.filter(col("doc_id") % 3 === c), c.toLong, s"$p/data")
+      }
+      // at-least-once redelivery of the last batch: the marker in the
+      // published stats version skips it
+      graft.streaming.StatsStream.maintainStep(
+        odd.filter(col("doc_id") % 3 === 2), 2L, s"$p/data")
+      p
+    }
 
   private val streamStatsPublish = Q(
     "stream_stats_publish",
@@ -832,26 +807,21 @@ object SourceQueries extends QueryModule {
   // per-file null counts give IS NULL real files to skip. Oracles are
   // the plain ci / IS NULL filters over documents with the derivations
   // replayed inline.
-  private val pointLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedPointLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    pointLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"pointzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .withColumn("doc_key", concat(lit("DOC-"), col("doc_id")))
-          .withColumn("opt_tag",
-            when(col("n_chars") % 7 === 0,
-              concat(lit("T"), upper(col("lang")))))
-          .repartitionByRange(8, col("opt_tag"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("opt_tag"), bloomCol = Some("doc_key"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.pointLayout", dir) {
+      val p = tmp(dir, s"pointzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "documents")
+        .withColumn("doc_key", concat(lit("DOC-"), col("doc_id")))
+        .withColumn("opt_tag",
+          when(col("n_chars") % 7 === 0,
+            concat(lit("T"), upper(col("lang")))))
+        .repartitionByRange(8, col("opt_tag"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("opt_tag"), bloomCol = Some("doc_key"))
+      p
+    }
 
   private val scanPrunedTextPoint = Q(
     "scan_pruned_text_point",
@@ -902,27 +872,22 @@ object SourceQueries extends QueryModule {
   // (same predicates: locus 1 quantity >= 30, locus 2 discount >=
   // 0.05, AND'd), so equality proves the pruned fact lost no
   // designations; ZoneMapsSpec pins that fact files were skipped.
-  private val factLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedFactLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    factLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"factzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          // the designation "allele" is the locus's own measure, so the
-          // clause grammar (one allele column) expresses both predicates
-          .withColumn("allele",
-            when(col("l_linenumber") === 1, col("l_quantity"))
-              .when(col("l_linenumber") === 2, col("l_discount")))
-          .repartitionByRange(8, col("l_linenumber"), col("l_orderkey"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("l_linenumber"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.factLayout", dir) {
+      val p = tmp(dir, s"factzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "lineitem")
+        // the designation "allele" is the locus's own measure, so the
+        // clause grammar (one allele column) expresses both predicates
+        .withColumn("allele",
+          when(col("l_linenumber") === 1, col("l_quantity"))
+            .when(col("l_linenumber") === 2, col("l_discount")))
+        .repartitionByRange(8, col("l_linenumber"), col("l_orderkey"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("l_linenumber"))
+      p
+    }
 
   private val j1Pruned = Q(
     "j1_pruned",
@@ -967,25 +932,20 @@ object SourceQueries extends QueryModule {
   // the same false. Oracle = the EXISTS / NOT EXISTS pair over the raw
   // rows; ZoneMapsSpec pins that fact files were skipped and
   // routed ≡ unrouted.
-  private val eavLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedEavLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    eavLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"eavzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey").as("entity_id"),
-            concat(lit("f"), col("l_linenumber")).as("field"),
-            col("l_returnflag").as("value"))
-          .repartitionByRange(8, col("field"), col("entity_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("field"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.eavLayout", dir) {
+      val p = tmp(dir, s"eavzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey").as("entity_id"),
+          concat(lit("f"), col("l_linenumber")).as("field"),
+          col("l_returnflag").as("value"))
+        .repartitionByRange(8, col("field"), col("entity_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("field"))
+      p
+    }
 
   private val f7Pruned = Q(
     "f7_pruned",
@@ -1022,27 +982,22 @@ object SourceQueries extends QueryModule {
   // including the count clause, whose per-locus scope means rows
   // outside every queried locus contribute 0 either way (an unscoped
   // count clause declines pruning, like designations' counts).
-  private val tagLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTagLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    tagLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"tagzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "lineitem")
-          .select(col("l_orderkey").as("entity_id"),
-            col("l_linenumber").as("locus"),
-            (upper(col("l_returnflag")) === "N").as("complete"),
-            when(upper(col("l_returnflag")) === "R", lit("flagged"))
-              .as("flag"))
-          .repartitionByRange(8, col("locus"), col("entity_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("locus"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.tagLayout", dir) {
+      val p = tmp(dir, s"tagzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "lineitem")
+        .select(col("l_orderkey").as("entity_id"),
+          col("l_linenumber").as("locus"),
+          (upper(col("l_returnflag")) === "N").as("complete"),
+          when(upper(col("l_returnflag")) === "R", lit("flagged"))
+            .as("flag"))
+        .repartitionByRange(8, col("locus"), col("entity_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("locus"))
+      p
+    }
 
   private val tagPruned = Q(
     "tag_pruned",
@@ -1084,22 +1039,17 @@ object SourceQueries extends QueryModule {
   // rows matching ONLY the grouped clause survive because their files
   // do. The oracle is the plain OR filter; ZoneMapsSpec pins both the
   // pruning (indexed members) and the decline (unindexed member).
-  private val orGroupLayoutCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedOrGroupLayout(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    orGroupLayoutCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => {
-        val p = tmp(dir, s"orgroupzones_${invocation.incrementAndGet()}")
-        Tables.load(s, dir, "documents")
-          .repartitionByRange(8, col("lang"), col("doc_id"))
-          .write.mode("overwrite").parquet(s"$p/data")
-        graft.sources.SkippingRegistry.register(s, s"$p/data",
-          zoneCols = Seq("lang", "source"))
-        p
-      })
+    SessionMemo(s, "SourceQueries.orGroupLayout", dir) {
+      val p = tmp(dir, s"orgroupzones_${invocation.incrementAndGet()}")
+      Tables.load(s, dir, "documents")
+        .repartitionByRange(8, col("lang"), col("doc_id"))
+        .write.mode("overwrite").parquet(s"$p/data")
+      graft.sources.SkippingRegistry.register(s, s"$p/data",
+        zoneCols = Seq("lang", "source"))
+      p
+    }
 
   private val scanPrunedOrGrouped = Q(
     "scan_pruned_or_grouped",

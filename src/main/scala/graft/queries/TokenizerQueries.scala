@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{SessionMemo, Tables}
 import graft.pipeline.Tokenizer
 import org.apache.spark.sql.functions._
 
@@ -19,14 +19,11 @@ object TokenizerQueries extends QueryModule {
   // per session like Profiles.cachedWarehouse, so the train and encode
   // entry points (and repeated invocations in a long-lived session) share
   // one training sweep instead of re-running the 10-round recursion.
-  private val mergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Tokenizer.Merge]]()
-
   private def trainedMerges(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[Tokenizer.Merge] =
-    mergeCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|" + Rounds,
-      _ => Tokenizer.bpeTrain(Tables.load(s, dir, "documents"), "text", Rounds))
+    SessionMemo(s, "TokenizerQueries.merges", dir) {
+      Tokenizer.bpeTrain(Tables.load(s, dir, "documents"), "text", Rounds)
+    }
 
   /** Shared oracle prelude: the word-frequency vocab (w0), char-level
     * reprs (r0), then per round r: pair counts (p_r), the winning pair
@@ -141,15 +138,12 @@ object TokenizerQueries extends QueryModule {
   private val VocabN = 40
   private val PieceLen = 6
 
-  private val vocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   private def trainedVocab(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Long)] =
-    vocabCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + s"|$VocabN|$PieceLen",
-      _ => Tokenizer.maxMatchVocab(
-        Tables.load(s, dir, "documents"), "text", VocabN, PieceLen))
+    SessionMemo(s, "TokenizerQueries.vocab", dir) {
+      Tokenizer.maxMatchVocab(
+        Tables.load(s, dir, "documents"), "text", VocabN, PieceLen)
+    }
 
   /** Shared oracle prelude: word frequencies (w0) and the ranked piece
     * vocabulary (v1) — mirrors Tokenizer.maxMatchVocab.
@@ -247,14 +241,11 @@ object TokenizerQueries extends QueryModule {
 
   private val VitUnroll = 16 // covers the corpus' max word length (8) 2x over
 
-  private val charCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, Long)]]()
-
   private def trainedChars(
       s: org.apache.spark.sql.SparkSession, dir: String): Seq[(String, Long)] =
-    charCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir,
-      _ => Tokenizer.charCounts(Tables.load(s, dir, "documents"), "text"))
+    SessionMemo(s, "TokenizerQueries.chars", dir) {
+      Tokenizer.charCounts(Tables.load(s, dir, "documents"), "text")
+    }
 
   /** The DP replay: char weights (c1), the combined cost table (vcost),
     * the lattice edge table (vedge), then states vb2..vb{n+1} where
@@ -485,19 +476,14 @@ object TokenizerQueries extends QueryModule {
   // in-session path and SHARES its oracle (the dedup_index_persisted
   // discipline). Production cadence: re-train + atomic pointer flip when
   // the corpus drifts; readers mid-encode keep the N-1 version.
-  private val tokenizerStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def cachedTokenizerStore(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    tokenizerStoreCache.computeIfAbsent(
-      Tables.sessionKey(s) + "|" + dir + "|" + Rounds,
-      _ => {
-        val p = java.nio.file.Files.createTempDirectory("graft-tokidx")
-          .toString + "/bpe"
-        graft.pipeline.IndexStore.saveTokenizer(s, trainedMerges(s, dir), p)
-        p
-      })
+    SessionMemo(s, "TokenizerQueries.store", dir) {
+      val p = java.nio.file.Files.createTempDirectory("graft-tokidx")
+        .toString + "/bpe"
+      graft.pipeline.IndexStore.saveTokenizer(s, trainedMerges(s, dir), p)
+      p
+    }
 
   private val tokenizerPersisted = Q(
     "tokenizer_persisted",

@@ -72,9 +72,8 @@ object ColumnBridge {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }
 
-  /** `SparkSession.sessionUUID` is `private[sql]`; memo keys need a
-    * session identity that can't be reused after GC the way
-    * identityHashCode can.
+  /** `SparkSession.sessionUUID` is `private[sql]`; [[graft.SessionMemo]]
+    * keys need a session identity that a later session can't reuse.
     */
   def sessionUUID(s: org.apache.spark.sql.SparkSession): Option[String] =
     s match {

@@ -15,12 +15,15 @@ import graft.pipeline.{Dedup, Similarity, TextAnalysis}
   *      use per-call [[Pinning]] pins; the only CacheManager entries
   *      allowed are the EXPLICITLY memoized session caches (Tables.load,
   *      the profile warehouse/ST dimension, query-layer memos), each
-  *      owned by a keyed map with documented lifetime.
+  *      owned by [[SessionMemo]], which drops a session's entries once
+  *      the session stops.
   *   2. An iterative loop that pins every round but frees none holds
   *      rounds × state blocks at peak instead of ~2 × state.
   *
   * These specs run each operator to completion and then count what it
-  * left behind.
+  * left behind. The last cases pin [[SessionMemo]]'s own rules: eviction
+  * of a dead owner's entries, nested and concurrent builds, failed
+  * builds, and artifact-scoped invalidation.
   */
 class CacheLifecycleSpec extends SparkSpec {
   import spark.implicits._
@@ -174,5 +177,96 @@ class CacheLifecycleSpec extends SparkSpec {
       s"left ${pinnedCount - base} pinned RDDs (want <=1: the pair list)")
     Pinning.unpin(pairs)
     assert(pinnedCount <= base)
+  }
+
+  private def uniqueArtifact(tag: String) =
+    s"CacheLifecycleSpec.$tag.${java.util.UUID.randomUUID}"
+
+  test("SessionMemo drops a dead owner's entries of every value kind on " +
+      "the next access") {
+    // the suites share one live SparkContext, so the owner here is an id
+    // plus a liveness check the spec controls
+    @volatile var alive = true
+    val owner = uniqueArtifact("owner")
+    def memo[V](artifact: String)(build: => V): V =
+      SessionMemo.memo(owner, () => alive, artifact, "key")(build)
+    memo("frame")(docsFixture)
+    memo("path")(java.nio.file.Files.createTempDirectory("graft-memo").toString)
+    memo("option")(Option(vecsFixture))
+    memo("seq")(Seq(1L, 2L, 3L))
+    memo("flag")(true)
+    val kinds = Seq("frame", "path", "option", "seq", "flag")
+    def held = kinds.map(k => SessionMemo.count[Any](owner, k)(_ => true))
+    assert(held == Seq(1, 1, 1, 1, 1))
+    alive = false
+    assert(held == Seq(0, 0, 0, 0, 0),
+      "a stopped owner's entries must be gone on the next access")
+  }
+
+  test("SessionMemo: nested builds succeed and 4 concurrent callers build " +
+      "each key exactly once") {
+    val art = uniqueArtifact("nested")
+    val outerBuilds = new java.util.concurrent.atomic.AtomicInteger
+    val innerBuilds = new java.util.concurrent.atomic.AtomicInteger
+    def inner(): org.apache.spark.sql.DataFrame = SessionMemo(spark, s"$art.inner", "k") {
+      innerBuilds.incrementAndGet()
+      Thread.sleep(50)
+      docsFixture
+    }
+    def outer(): Long = SessionMemo(spark, s"$art.outer", "k") {
+      outerBuilds.incrementAndGet()
+      Thread.sleep(50)
+      inner().count()
+    }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    try {
+      // callers race on both keys: two enter through the outer build,
+      // two straight into the inner one
+      val calls = (0 until 4).map(i => pool.submit(
+        new java.util.concurrent.Callable[Long] {
+          def call(): Long = {
+            start.await()
+            if (i % 2 == 0) outer() else inner().count()
+          }
+        }))
+      start.countDown()
+      val got = calls.map(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
+      assert(got.forall(_ == 30L))
+    } finally pool.shutdown()
+    assert(outerBuilds.get == 1, s"outer built ${outerBuilds.get} times")
+    assert(innerBuilds.get == 1, s"inner built ${innerBuilds.get} times")
+  }
+
+  test("SessionMemo: a build that throws leaves no entry and the next " +
+      "call rebuilds") {
+    val art = uniqueArtifact("failing")
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    intercept[IllegalStateException] {
+      SessionMemo[String](spark, art, "k") {
+        builds.incrementAndGet()
+        throw new IllegalStateException("build failed")
+      }
+    }
+    assert(SessionMemo.count[Any](spark, art)(_ => true) == 0)
+    assert(SessionMemo(spark, art, "k") {
+      builds.incrementAndGet()
+      "built"
+    } == "built")
+    assert(builds.get == 2)
+    assert(SessionMemo.count[Any](spark, art)(_ => true) == 1)
+  }
+
+  test("SessionMemo.invalidate drops only its own artifact's matching keys") {
+    val a = uniqueArtifact("a")
+    val b = uniqueArtifact("b")
+    Seq("x", "y").foreach { k =>
+      SessionMemo(spark, a, k)(k)
+      SessionMemo(spark, b, k)(k)
+    }
+    SessionMemo.invalidate[String](a)(_ == "x")
+    assert(SessionMemo.count[String](spark, a)(_ => true) == 1)
+    assert(SessionMemo.count[String](spark, a)(_ == "y") == 1)
+    assert(SessionMemo.count[String](spark, b)(_ => true) == 2)
   }
 }
